@@ -1,274 +1,62 @@
-"""Triangular inversion and full matrix inverse.
+"""Full matrix inverse and the solvers built on ``lu()``.
 
 Reference analogues: `LUInverse.java` — mappers invert triangular
 column strips (O16, `:88-167`), the reducer multiplies U⁻¹·L⁻¹ and
 applies the pivot permutation (O17, `:169-389`).
 
-Spark-first: triangular inversion is the block-recursive identity
+``inverse()`` runs the shared skeleton ``lu.block_lu`` with factors
+that arrive inverted and pre-pivoted: each leaf task returns
+(J, U⁻¹) with J ≡ L⁻¹·P and P·A = L·U, so A⁻¹ = U⁻¹·J. A level needs
+only static block algebra:
 
-    inv([[A,0],[C,D]]) = [[A⁻¹, 0], [−D⁻¹·C·A⁻¹, D⁻¹]]
-    inv([[A,B],[0,D]]) = [[A⁻¹, −A⁻¹·B·D⁻¹], [0, D⁻¹]]
+    U2 = J1·A2                L2 = A3·U1⁻¹       (solves are multiplies)
+    S  = A4 − L2·U2           (the skeleton's Schur gemm, O11)
+    U⁻¹ = [[U1⁻¹, −U1⁻¹·U2·U3⁻¹], [0, U3⁻¹]]
+    J   = [[J1, 0], [−J3·L2·J1, J3]]
 
-with driver-local numpy leaves — each level costs two distributed
-matmuls; depth is log2(n/leaf). The full inverse is then
+(from L = [[L1,0],[P3·L2,L3]], P = diag(P1,P3): L⁻¹·P =
+[[L1⁻¹P1, 0],[−L3⁻¹P3·L2·L1⁻¹P1, L3⁻¹P3]], each block a child's J).
+No pivot vector crosses to the driver and no permute stage runs: the
+inverse is one lazy plan whose stages overlap by data dependency
+alone (the reference likewise applies pivots by index indirection,
+`Read_LU.java:66-92`).
 
-    A⁻¹ = U⁻¹ · L⁻¹ · P
-
-with the permutation applied as a block-routing gather (no physical
-row moves until the very end — SURVEY.md §4 P12: the reference also
-composes pivots as index vectors and applies them at read time).
+``solve()`` and ``determinant()`` use ``lu()`` itself: solve keeps the
+triangular substitutions, which are better conditioned than
+inverse()·B.
 """
 
 from __future__ import annotations
 
-import numpy as np
+from collections.abc import Callable
 
-from pyspark.sql import functions as F
+import numpy as np
 
 from matrixinversion_spark.matrix import kernels
 from matrixinversion_spark.matrix.core import BlockMatrixFrame
 from matrixinversion_spark.matrix.lu import (
-    DEFAULT_LEAF,
     _checkpoint,
-    _concurrently,
-    _level_ck,
+    _lu_kernel,
+    _pins,
+    _quad,
     auto_leaf,
+    block_lu,
+    is_leaf,
+    leaf_task,
     lu,
+    solve_left,
 )
-from matrixinversion_spark.matrix.ops import (
-    gemm,
-    inv_leaf_distributed as _inv_leaf_distributed,
-    leaf_inv_mode as _leaf_inv_mode,
-    multiply,
-)
+from matrixinversion_spark.matrix.ops import gemm, multiply, permute_rows
 
 
-def inverse_lower_unit(lo: BlockMatrixFrame,
-                       leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
-    """Invert a distributed unit-lower-triangular matrix (O16)."""
-    spark = lo.df.sparkSession
-    if lo.n_rows <= leaf_size or lo.nbi == 1:
-        if lo.local is None and _leaf_inv_mode() == "executor":
-            return _inv_leaf_distributed(lo, "lower")
-        return BlockMatrixFrame.from_numpy(
-            spark, kernels.inv_lower_unit(lo.to_numpy()), lo.block_size
-        )
-    mb = lo.nbi // 2
-    a = lo.slice_blocks(0, mb, 0, mb)
-    c = lo.slice_blocks(mb, lo.nbi, 0, mb)
-    d = lo.slice_blocks(mb, lo.nbi, mb, lo.nbi)
-    ck = _level_ck(mb * lo.block_size <= leaf_size or mb == 1)
-    ia, id_ = _concurrently(
-        lambda: ck(inverse_lower_unit(a, leaf_size)).persist(),
-        lambda: ck(inverse_lower_unit(d, leaf_size)).persist(),
-    )
-    corner = gemm(multiply(id_, c), ia, alpha=-1.0)
-    df = ia.df.unionAll(corner.shift(mb, 0)).unionAll(id_.shift(mb, mb))
-    return BlockMatrixFrame(df, lo.n_rows, lo.n_cols, lo.block_size)
-
-
-def inverse_upper(up: BlockMatrixFrame,
-                  leaf_size: int = DEFAULT_LEAF) -> BlockMatrixFrame:
-    """Invert a distributed upper-triangular matrix (O16)."""
-    spark = up.df.sparkSession
-    if up.n_rows <= leaf_size or up.nbi == 1:
-        if up.local is None and _leaf_inv_mode() == "executor":
-            return _inv_leaf_distributed(up, "upper")
-        return BlockMatrixFrame.from_numpy(
-            spark, kernels.inv_upper(up.to_numpy()), up.block_size
-        )
-    mb = up.nbi // 2
-    a = up.slice_blocks(0, mb, 0, mb)
-    b = up.slice_blocks(0, mb, mb, up.nbj)
-    d = up.slice_blocks(mb, up.nbi, mb, up.nbj)
-    ck = _level_ck(mb * up.block_size <= leaf_size or mb == 1)
-    ia, id_ = _concurrently(
-        lambda: ck(inverse_upper(a, leaf_size)).persist(),
-        lambda: ck(inverse_upper(d, leaf_size)).persist(),
-    )
-    corner = gemm(multiply(ia, b), id_, alpha=-1.0)
-    df = ia.df.unionAll(corner.shift(0, mb)).unionAll(id_.shift(mb, mb))
-    return BlockMatrixFrame(df, up.n_rows, up.n_cols, up.block_size)
-
-
-def _leaf_inv_frames(a: BlockMatrixFrame, retained: list | None = None
-                     ) -> tuple[BlockMatrixFrame, BlockMatrixFrame]:
-    """Factor AND invert a leaf inside one executor task, returning
-    (J, U⁻¹) with J ≡ L⁻¹·P — the pivot already folded into L⁻¹'s
-    columns (a free numpy gather while the matrix sits in task
-    memory).
-
-    This is the trick that makes the fused inverse recursion
-    (``_lu_inv_rec``) fully static: every pivot application the
-    two-sweep pipeline did at the dataflow level (permute_rows of A2,
-    of L2, and the final permute_cols) becomes an in-task column
-    shuffle here, so NO pivot vector ever crosses to the driver and
-    the recursion has no blocking collect — the entire inverse
-    executes as one Spark job whose stages overlap by data
-    dependency alone. P = diag(P_leaf…) is block-diagonal at leaf
-    granularity, so J keeps L⁻¹'s block-lower-triangular zero
-    structure (columns only shuffle WITHIN a leaf's column range) —
-    J blocks above the diagonal of a multi-block leaf can be nonzero,
-    hence tag 0 emits the full square while tag 1 (U⁻¹) keeps the
-    upper-triangle filter. Reference analogue: LUInverse.java's
-    mappers likewise invert triangular strips executor-side and
-    apply pivots by index indirection, never materializing P
-    (`LUInverse.java:88-167`, `Read_LU.java:66-92`)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, StructField, StructType,
-    )
-
-    bs, n, m = a.block_size, a.n_rows, a.n_cols
-    schema = StructType(
-        [
-            StructField("tag", IntegerType()),
-            StructField("bi", IntegerType()),
-            StructField("bj", IntegerType()),
-            StructField("rows", IntegerType()),
-            StructField("cols", IntegerType()),
-            StructField("data", ArrayType(DoubleType())),
-        ]
-    )
-
-    def fac(pdf: pd.DataFrame) -> pd.DataFrame:
-        mat = np.zeros((n, m))
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-            mat[int(bi) * bs:int(bi) * bs + int(r),
-                int(bj) * bs:int(bj) * bs + int(c)] = blk
-        lu_packed, perm = kernels.ludcmp(mat)
-        lower, upper = kernels.split_lu(lu_packed)
-        jl = kernels.inv_lower_unit(lower)[:, np.argsort(perm)]
-        iu = kernels.inv_upper(upper)
-        out = []
-        for tag, tri in ((0, jl), (1, iu)):
-            for bi in range((n + bs - 1) // bs):
-                for bj in range((m + bs - 1) // bs):
-                    if tag == 1 and bi > bj:
-                        continue  # strict lower of U⁻¹ is zero
-                    blk = tri[bi * bs:(bi + 1) * bs,
-                              bj * bs:(bj + 1) * bs]
-                    out.append(
-                        (tag, bi, bj, blk.shape[0], blk.shape[1],
-                         np.ascontiguousarray(blk).ravel())
-                    )
-        return pd.DataFrame(
-            out, columns=["tag", "bi", "bj", "rows", "cols", "data"]
-        )
-
-    tagged = (
-        a.df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(fac, schema)
-        .persist()
-    )
-    if retained is not None:
-        retained.append(tagged)
-    block_cols = ["bi", "bj", "rows", "cols", "data"]
-    jl = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 0).select(*block_cols), n, m, bs
-    )
-    iu = BlockMatrixFrame(
-        tagged.filter(F.col("tag") == 1).select(*block_cols), n, m, bs
-    )
-    return jl, iu
-
-
-def _lu_inv_rec(a: BlockMatrixFrame, leaf_size: int,
-                retained: list | None = None
-                ) -> tuple[BlockMatrixFrame, BlockMatrixFrame]:
-    """Fused LU + triangular inversion + pivot fold: one bottom-up
-    sweep returning (J, U⁻¹) with J ≡ L⁻¹·P and P·A = L·U, so
-    A⁻¹ = U⁻¹·J.
-
-    The two-sweep pipeline (factor everything, THEN invert the
-    assembled triangles, THEN un-pivot) walks the recursion twice,
-    pays separate single-task ``inv_leaf_distributed`` stages per
-    leaf, three permute stages per level, and — critically — blocks
-    the driver on a pivot collect per leaf. Here each leaf task
-    inverts its triangles AND folds its pivot in the same task that
-    factored them (``_leaf_inv_frames``), and each level combines the
-    child results with static block algebra only:
-
-        U2 = J1·A2                L2 = A3·U1⁻¹      (solves become one
-                                                    multiply: factors
-                                                    arrive inverted
-                                                    and pre-pivoted)
-        S  = A4 − L2·U2           (Schur, fused-bias gemm, O11)
-        U⁻¹ = [[U1⁻¹, −U1⁻¹·U2·U3⁻¹], [0, U3⁻¹]]
-        J   = [[J1, 0], [−J3·L2·J1, J3]]
-
-    (from L = [[L1,0],[P3·L2,L3]], P = diag(P1,P3):
-    L⁻¹·P = [[L1⁻¹P1, 0],[−L3⁻¹P3·L2·L1⁻¹P1, L3⁻¹P3]] — each block is
-    a child's J, so the pivot fold composes recursively and no
-    permutation ever reaches the dataflow.) Identical arithmetic to
-    lu() + inverse_upper/lower + permute (the corner gemms move into
-    the factorization sweep; the pivots move into the leaf tasks), so
-    the residual goldens carry over. NOTHING here blocks the driver:
-    the recursion builds one lazy plan and the final action executes
-    it as a single Spark job whose stages overlap purely by data
-    dependency — leaf factorization, sibling solves, corner gemms all
-    schedule concurrently wherever the DAG allows.
-    """
-    spark = a.df.sparkSession
-    bs = a.block_size
-    if a.n_rows <= leaf_size or a.nbi == 1:
-        if a.local is None and _leaf_inv_mode() == "executor":
-            return _leaf_inv_frames(a, retained)
-        lu_packed, perm = kernels.ludcmp(a.to_numpy())
-        lower, upper = kernels.split_lu(lu_packed)
-        jl = kernels.inv_lower_unit(lower)[:, np.argsort(perm)]
-        return (
-            BlockMatrixFrame.from_numpy(spark, jl, bs),
-            BlockMatrixFrame.from_numpy(spark, kernels.inv_upper(upper), bs),
-        )
-
-    nb = a.nbi
-    mb = nb // 2
-    a1 = a.slice_blocks(0, mb, 0, mb)
-    a2 = a.slice_blocks(0, mb, mb, nb)
-    a3 = a.slice_blocks(mb, nb, 0, mb)
-    a4 = a.slice_blocks(mb, nb, mb, nb)
-
-    # Depth-aware lineage control (measured, N=2048/N=4096 A/B): at
-    # the LOWEST internal level the children are leaf task outputs —
-    # already persisted, two-step lineage — and localCheckpoint's
-    # serialized materialization jobs dominate the wall (7.8 -> 4.0 s
-    # median at N=2048 without them). One level up the opposite
-    # holds: without checkpoints the recursive plan triples Catalyst
-    # analysis time (4.7 -> 12.8 s plan-build at N=4096). So: plain
-    # persist when the children are leaves, checkpoint+persist above.
-    child_leaf = mb * a.block_size <= leaf_size or mb == 1
-    ck = (lambda m: m) if child_leaf else _checkpoint
-
-    jl1, iu1 = _lu_inv_rec(a1, leaf_size, retained)
-    jl1 = ck(jl1).persist()
-    iu1 = ck(iu1).persist()
-
-    u2 = ck(multiply(jl1, a2)).persist()
-    l2 = ck(multiply(a3, iu1)).persist()
-
-    s = ck(gemm(l2, u2, c=a4, alpha=-1.0))
-    jl3, iu3 = _lu_inv_rec(s, leaf_size, retained)
-    jl3 = ck(jl3).persist()
-    iu3 = ck(iu3).persist()
-    if retained is not None:
-        retained.extend(
-            f.df for f in (jl1, iu1, u2, l2, jl3, iu3)
-        )
-
-    cu = gemm(multiply(iu1, u2), iu3, alpha=-1.0)
-    cl = gemm(multiply(jl3, l2), jl1, alpha=-1.0)
-    iu_df = iu1.df.unionAll(cu.shift(0, mb)).unionAll(iu3.shift(mb, mb))
-    jl_df = jl1.df.unionAll(cl.shift(mb, 0)).unionAll(jl3.shift(mb, mb))
-    n = a.n_rows
-    return (
-        BlockMatrixFrame(jl_df, n, n, bs),
-        BlockMatrixFrame(iu_df, n, n, bs),
-    )
+def _inv_kernel(mat: np.ndarray, floor: float | None) -> tuple:
+    """(J, U⁻¹) of a leaf: the pivot folds into L⁻¹'s columns while
+    the matrix sits in task memory. P is block-diagonal at leaf
+    granularity, so J keeps L⁻¹'s block-lower zero structure, but a
+    multi-block leaf's J can be nonzero above its diagonal."""
+    perm, lower, upper = _lu_kernel(mat, floor)
+    return (kernels.inv_lower_unit(lower)[:, np.argsort(perm)],
+            kernels.inv_upper(upper))
 
 
 def inverse(a: BlockMatrixFrame,
@@ -277,22 +65,33 @@ def inverse(a: BlockMatrixFrame,
     partition → LU → triangular inverses → multiply → un-pivot,
     `Inverse.java:28-40`). ``leaf_size=None`` picks ``auto_leaf``.
 
-    Runs the fused single-sweep recursion (``_lu_inv_rec``): leaves
-    emit pre-pivoted triangular inverses, levels combine them with
-    static block algebra, and A⁻¹ = U⁻¹·J is one final multiply — no
-    pivot collect, no permute stage, one Spark job end to end.
-
     Cache lifecycle: every frame the recursion persists (leaf task
-    outputs plus the six per-level combiners) is tracked on the
-    result's ``retained`` list — ``to_numpy`` releases them after the
-    collect, and callers materializing another way (parquet write)
-    should call ``result.release()``; without that, repeated
-    inversions in one session would accrete O(leaves + levels)
-    cached frames until eviction pressure degrades the executors."""
+    outputs plus the six per-level pins) is tracked on the result's
+    ``retained`` list — ``to_numpy`` releases them after the collect,
+    and callers materializing another way (parquet write) should call
+    ``result.release()``."""
     if leaf_size is None:
         leaf_size = auto_leaf(a.n_rows)
     tracked: list = []
-    jl, iu = _lu_inv_rec(a, leaf_size, tracked)
+
+    def leaf(m: BlockMatrixFrame, top: BlockMatrixFrame) -> tuple:
+        return (None, *leaf_task(
+            m, _inv_kernel, ("full", "upper"), tracked, top
+        ))
+
+    def solve(f1: tuple, a2: BlockMatrixFrame, a3: BlockMatrixFrame):
+        _, jl1, iu1 = f1
+        return multiply(jl1, a2), multiply(a3, iu1)
+
+    def combine(f1: tuple, u2: BlockMatrixFrame, l2: BlockMatrixFrame,
+                f3: tuple, pin: Callable) -> tuple:
+        (_, jl1, iu1), (_, jl3, iu3) = f1, f3
+        jl3, iu3 = pin(jl3), pin(iu3)  # each read by a corner and the union
+        cu = gemm(multiply(iu1, u2), iu3, alpha=-1.0)
+        cl = gemm(multiply(jl3, l2), jl1, alpha=-1.0)
+        return None, _quad(jl1, None, cl, jl3), _quad(iu1, cu, None, iu3)
+
+    _, jl, iu = block_lu(a, leaf_size, leaf, solve, combine, tracked)
     out = multiply(iu, jl)
     out.retained.extend(tracked)
     return out
@@ -302,10 +101,8 @@ def solve(a: BlockMatrixFrame, b: BlockMatrixFrame,
           leaf_size: int | None = None) -> BlockMatrixFrame:
     """Solve A·X = B for a general square A (LU + two triangular
     solves — never forms A⁻¹ explicitly; cheaper and better
-    conditioned than inverse()·B when B has few columns)."""
-    from matrixinversion_spark.matrix.lu import solve_lower
-    from matrixinversion_spark.matrix.ops import permute_rows
-
+    conditioned than inverse()·B when B has few columns). Every frame
+    persisted on the way is tracked on the result's ``retained``."""
     if a.n_rows != a.n_cols or a.n_cols != b.n_rows:
         raise ValueError(
             f"solve shape mismatch: A is {a.n_rows}x{a.n_cols}, "
@@ -314,49 +111,13 @@ def solve(a: BlockMatrixFrame, b: BlockMatrixFrame,
     if leaf_size is None:
         leaf_size = auto_leaf(a.n_rows)
     perm, lo, up = lu(a, leaf_size)
-    # leaf-sized factorizations return filters over an already-
-    # persisted task output — checkpointing those only adds
-    # serialized materialization jobs (see lu._level_ck)
-    ck = _level_ck(a.n_rows <= leaf_size or a.nbi == 1)
-    lo = ck(lo).persist()
-    up = ck(up).persist()
-    y = solve_lower(lo, permute_rows(b, perm), leaf_size)  # L·Y = P·B
-    out = _solve_upper_left(up, y, leaf_size)              # U·X = Y
-    # top-level factor caches ride the result's retained list (see
-    # inverse(): to_numpy / release() frees them after the action);
-    # per-level solve caches inside the recursions stay session-
-    # scoped — bounded by one frame per level, not per leaf
-    out.retained.extend([lo.df, up.df])
+    tracked = lo.retained  # the factorization's caches, shared by L and U
+    _, pin = _pins(is_leaf(a, leaf_size), tracked)
+    lo, up = pin(lo), pin(up)
+    y = solve_left(lo, permute_rows(b, perm), leaf_size, True, tracked)
+    out = solve_left(up, y, leaf_size, False, tracked)      # U·X = Y
+    out.retained.extend(tracked)
     return out
-
-
-def _solve_upper_left(up: BlockMatrixFrame, b: BlockMatrixFrame,
-                      leaf_size: int) -> BlockMatrixFrame:
-    """Solve U·X = B for upper-triangular U (back substitution,
-    recursive halving like lu.solve_lower)."""
-    from matrixinversion_spark.matrix.lu import _apply_left
-
-    if up.n_rows <= leaf_size or up.nbi == 1:
-        if up.local is None and _leaf_inv_mode() == "executor":
-            # leaf factor is distributed: invert it in one executor
-            # task and solve as a join-gemm — no driver transfer at
-            # all (same shuffle count as the groupBy in _apply_left)
-            return multiply(_inv_leaf_distributed(up, "upper"), b)
-        return _apply_left(kernels.inv_upper(up.to_numpy()), b)
-    mb = up.nbi // 2
-    ua = up.slice_blocks(0, mb, 0, mb)
-    ub = up.slice_blocks(0, mb, mb, up.nbj)
-    ud = up.slice_blocks(mb, up.nbi, mb, up.nbj)
-    ba = b.slice_blocks(0, mb, 0, b.nbj)
-    bb = b.slice_blocks(mb, b.nbi, 0, b.nbj)
-    # persist: xb is used twice (Schur update + union), see
-    # lu.solve_lower; checkpoint only above the leaf-adjacent level
-    xb = _level_ck(mb * up.block_size <= leaf_size or mb == 1)(
-        _solve_upper_left(ud, bb, leaf_size)
-    ).persist()
-    xa = _solve_upper_left(ua, gemm(ub, xb, c=ba, alpha=-1.0), leaf_size)
-    df = xa.df.unionAll(xb.shift(mb, 0))
-    return BlockMatrixFrame(df, b.n_rows, b.n_cols, b.block_size)
 
 
 def pinv(a: BlockMatrixFrame,
@@ -400,7 +161,6 @@ def determinant(a: BlockMatrixFrame,
     from pyspark.sql import functions as F
 
     perm, _lo, up = lu(a, leaf_size)
-    bs = up.block_size
     diag_prod_log = (
         up.df.filter(F.col("bi") == F.col("bj"))
         .select(
@@ -427,6 +187,7 @@ def determinant(a: BlockMatrixFrame,
         )
         .collect()[0]
     )
+    up.release()  # frees the caches L and U share
     # permutation sign: (-1)^(n − number of cycles)
     perm = np.asarray(perm)
     seen = np.zeros(len(perm), dtype=bool)

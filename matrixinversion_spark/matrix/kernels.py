@@ -22,12 +22,24 @@ import numpy as np
 PANEL = 128      # panel width: inner loops touch ≤PANEL columns
 
 
-def ludcmp(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+def pivot_floor(n: int, max_abs: float) -> float:
+    """Singular-pivot threshold ``eps·n·max|A|`` for an n×n matrix A."""
+    return float(np.finfo(np.float64).eps * max(n, 1) * max_abs)
+
+
+def ludcmp(a: np.ndarray, floor: float | None = None
+           ) -> tuple[np.ndarray, np.ndarray]:
     """LU-decompose ``a`` with partial pivoting (blocked).
 
     Returns ``(lu, perm)`` where ``lu`` holds L (unit diagonal,
     strictly lower part) and U (upper part) packed together, and
     ``perm`` is the row permutation such that ``a[perm] = L @ U``.
+
+    A pivot at or below ``floor`` raises ``LinAlgError("singular
+    leaf …")``. The default floor is ``pivot_floor`` of ``a`` itself;
+    a recursion leaf that is a Schur complement passes the floor of
+    the WHOLE input instead, because its own entries are roundoff-sized
+    when the input is singular.
     """
     a = np.array(a, dtype=np.float64, copy=True)
     n = a.shape[0]
@@ -36,7 +48,8 @@ def ludcmp(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     # `LUDecomposition.java:58`) and lets garbage propagate; failing
     # loudly is strictly safer for a distributed factorization, where
     # a poisoned leaf silently corrupts every downstream block.
-    pivot_floor = np.finfo(np.float64).eps * max(n, 1) * np.abs(a).max()
+    if floor is None:
+        floor = pivot_floor(n, np.abs(a).max())
     for k0 in range(0, n, PANEL):
         k1 = min(k0 + PANEL, n)
         # panel factorization (unblocked over ≤PANEL columns; row
@@ -47,10 +60,10 @@ def ludcmp(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
                 a[[k, p]] = a[[p, k]]
                 perm[[k, p]] = perm[[p, k]]
             piv = a[k, k]
-            if abs(piv) <= pivot_floor:
+            if abs(piv) <= floor:
                 raise np.linalg.LinAlgError(
                     f"singular leaf: |pivot|={abs(piv):.3e} at k={k} "
-                    f"(floor {pivot_floor:.3e} = eps*n*max|A|)"
+                    f"(floor {floor:.3e} = eps*n*max|A|)"
                 )
             a[k + 1:, k] /= piv
             if k + 1 < n and k + 1 < k1:

@@ -306,52 +306,6 @@ def permute_rows(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
     return BlockMatrixFrame(out, a.n_rows, a.n_cols, bs)
 
 
-def permute_cols(a: BlockMatrixFrame, perm: np.ndarray) -> BlockMatrixFrame:
-    """Return M with M[:, j] = A[:, perm[j]] (column gather).
-
-    Same routing strategy as ``permute_rows`` but on block columns —
-    used to apply the pivot on the right (A⁻¹ = U⁻¹·L⁻¹·P) without
-    paying two full transposes.
-    """
-    perm = np.asarray(perm, dtype=np.int64)
-    if perm.shape[0] != a.n_cols:
-        raise ValueError("permutation length != n_cols")
-    bs = a.block_size
-    spark = a.df.sparkSession
-
-    pairs = sorted(
-        {(int(j // bs), int(p // bs)) for j, p in enumerate(perm)}
-    )
-    routing = spark.createDataFrame(pairs, "bj_out int, bj int")
-    joined = a.df.join(F.broadcast(routing), "bj")
-
-    def assemble(pdf: pd.DataFrame) -> pd.DataFrame:
-        bj_out = int(pdf["bj_out"].iloc[0])
-        bi = int(pdf["bi"].iloc[0])
-        rows = int(pdf["rows"].iloc[0])
-        c0 = bj_out * bs
-        c1 = min(c0 + bs, perm.shape[0])
-        out = np.zeros((rows, c1 - c0))
-        for bj_src, r, c, d in zip(
-            pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(r, c)
-            src0 = int(bj_src) * bs
-            for local_j, global_j in enumerate(range(c0, c1)):
-                src = perm[global_j]
-                if src0 <= src < src0 + int(c):
-                    out[:, local_j] = blk[:, src - src0]
-        return pd.DataFrame(
-            [(bi, bj_out, out.shape[0], out.shape[1], out.ravel())],
-            columns=["bi", "bj", "rows", "cols", "data"],
-        )
-
-    out = joined.groupBy("bi", "bj_out").applyInPandas(
-        assemble, BLOCK_SCHEMA
-    )
-    return BlockMatrixFrame(out, a.n_rows, a.n_cols, bs)
-
-
 def max_abs_diff_from_identity(a: BlockMatrixFrame) -> float:
     """max|A − I|∞ — the correctness functional ‖A·A⁻¹ − I‖ from
     SURVEY.md §5 (property-based goldens)."""
@@ -393,72 +347,3 @@ def max_abs_diff(a: BlockMatrixFrame, b: BlockMatrixFrame) -> float:
         .collect()[0]
     )
     return float(row.max_err if row.max_err is not None else 0.0)
-
-
-def leaf_inv_mode() -> str:
-    """Where leaf triangular inversions/factorizations run:
-    ``executor`` (default) or ``driver`` (the collect-invert-reupload
-    path, kept for A/B measurement via ``SPARK_GRAFT_LEAF_INV=driver``
-    — see BENCH_NOTES round-5)."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_LEAF_INV", "executor")
-
-
-def inv_leaf_distributed(tri: BlockMatrixFrame,
-                         kind: str) -> BlockMatrixFrame:
-    """Invert a leaf-sized triangular factor INSIDE one executor task.
-
-    The reference inverts triangular strips in its mappers
-    (`LUInverse.java:88-167`) — executor-side, never on the driver.
-    The driver-roundtrip alternative (collect → np.linalg.inv →
-    createDataFrame) measurably loses on local[32]: the collect moves
-    a leaf (8–128 MB) through Arrow while sibling jobs run, and the
-    driver-thread BLAS then contends with all 32 executor threads for
-    cores, inflating a 0.1 s inversion to ~4 s (measured,
-    scripts/exp_pipeline_16k.py — driver leaf kernels were 63 s of a
-    99 s N=4096 inverse). Shipping the blocks to ONE task instead
-    costs a leaf-sized shuffle but runs the BLAS in a scheduled core
-    slot and skips both driver transfers. On a multi-executor cluster
-    the same plan also removes the driver as a bandwidth bottleneck.
-    """
-    from matrixinversion_spark.matrix import kernels
-
-    bs = tri.block_size
-    n, m = tri.n_rows, tri.n_cols
-    inv_fn = (kernels.inv_upper if kind == "upper"
-              else kernels.inv_lower_unit)
-
-    def inv(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = np.zeros((n, m))
-        for bi, bj, r, c, d in zip(
-            pdf["bi"], pdf["bj"], pdf["rows"], pdf["cols"], pdf["data"]
-        ):
-            blk = np.asarray(d, dtype=np.float64).reshape(int(r), int(c))
-            a[int(bi) * bs:int(bi) * bs + int(r),
-              int(bj) * bs:int(bj) * bs + int(c)] = blk
-        x = inv_fn(a)
-        out = []
-        for bi in range((n + bs - 1) // bs):
-            for bj in range((m + bs - 1) // bs):
-                if kind == "upper" and bi > bj:
-                    continue  # strict lower of U⁻¹ is zero
-                if kind == "lower" and bj > bi:
-                    continue  # strict upper of L⁻¹ is zero
-                blk = x[bi * bs:(bi + 1) * bs, bj * bs:(bj + 1) * bs]
-                out.append(
-                    (bi, bj, blk.shape[0], blk.shape[1],
-                     np.ascontiguousarray(blk).ravel())
-                )
-        return pd.DataFrame(
-            out, columns=["bi", "bj", "rows", "cols", "data"]
-        )
-
-    # a named constant column, not groupBy(lit(1)) — Spark resolves a
-    # bare integer literal in groupBy as a GROUP BY ordinal
-    df = (
-        tri.df.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandas(inv, BLOCK_SCHEMA)
-    )
-    return BlockMatrixFrame(df, n, m, bs)

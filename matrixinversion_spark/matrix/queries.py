@@ -166,6 +166,7 @@ def la_lu_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         residual = ops.max_abs_diff(
             ops.permute_rows(a, perm), ops.multiply(lo, up)
         )
+        lo.release()  # the factorization's caches, shared with up
     return spark.createDataFrame(
         [(256, float(round(residual, 6)), bool(residual < 1e-10 * 256))],
         "n int, residual_r6 double, ok boolean",
@@ -392,6 +393,7 @@ def la_solve_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         b.persist()
         x = invmod.solve(a, b, leaf_size=128)
         residual = ops.max_abs_diff(ops.multiply(a, x), b)
+        x.release()
     return spark.createDataFrame(
         [(n, k, float(round(residual, 6)), bool(residual < 1e-8 * n))],
         "n int, n_rhs int, residual_r6 double, ok boolean",

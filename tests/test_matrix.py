@@ -109,20 +109,6 @@ def test_triangular_solves_distributed(spark, rng):
     assert np.abs(x2 @ upper - b.T).max() < 1e-10
 
 
-def test_triangular_inverses_distributed(spark, rng):
-    n = 96
-    lower = np.tril(rng.random((n, n)), -1) + np.eye(n)
-    upper = np.triu(rng.random((n, n))) + np.eye(n) * 3
-    il = invmod.inverse_lower_unit(
-        BlockMatrixFrame.from_numpy(spark, lower, 32), leaf_size=32
-    ).to_numpy()
-    iu = invmod.inverse_upper(
-        BlockMatrixFrame.from_numpy(spark, upper, 32), leaf_size=32
-    ).to_numpy()
-    assert np.abs(lower @ il - np.eye(n)).max() < 1e-10
-    assert np.abs(upper @ iu - np.eye(n)).max() < 1e-10
-
-
 def _inverse_check(spark, m: np.ndarray, bs: int, leaf: int,
                    tol_scale: float = 1.0):
     n = m.shape[0]

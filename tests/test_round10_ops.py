@@ -28,13 +28,19 @@ class TestFusedInversePlanPin:
         # block data) crosses to the driver during plan construction.
         # Every driver transfer in pyspark goes through collect() /
         # toPandas() / toLocalIterator(); none may appear in the
-        # fused recursion's source.
+        # shared recursion skeleton, the leaf helper, or the fused
+        # inverse's callbacks. lu()'s pivot collect is the one allowed
+        # driver transfer of the LU family.
         from matrixinversion_spark.matrix import inverse as invmod
+        from matrixinversion_spark.matrix import lu as lumod
 
         for fn in (
-            invmod._lu_inv_rec,
-            invmod._leaf_inv_frames,
+            lumod.block_lu,
+            lumod.leaf_task,
+            lumod.solve_left,
+            lumod.solve_upper_right,
             invmod.inverse,
+            invmod.solve,
         ):
             src = inspect.getsource(fn)
             for marker in (".collect(", ".toPandas(", ".toLocalIterator("):
@@ -43,6 +49,10 @@ class TestFusedInversePlanPin:
                     f"({marker}) — the fused one-job-per-sweep plan "
                     "shape is broken"
                 )
+        module_src = inspect.getsource(lumod)
+        assert module_src.count(".collect(") == 1 == inspect.getsource(
+            lumod.lu
+        ).count(".collect("), "lu.py may only collect lu()'s pivots"
 
     def test_job_fingerprint_and_residual_2048(self, spark):
         # Exact bench geometry (bench.py INVERSE_*): N=2048, 1024
@@ -113,6 +123,98 @@ class TestFusedInversePlanPin:
             and d.storageLevel.useDisk is False
             for d in tracked
         ), "an intermediate frame is still persisted after release()"
+
+
+def _jobs_and_stages(spark, action) -> tuple[int, int]:
+    """Spark jobs and distinct stage ids (skipped stages included, so
+    the count is the plan's shape, not the cache state) of ``action``."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def max_job():
+        ids = tracker.getJobIdsForGroup(None)
+        return max(ids) if ids else -1
+
+    j0 = max_job()
+    action()
+    j1 = max_job()
+    stages = {
+        s for j in range(j0 + 1, j1 + 1)
+        for s in tracker.getJobInfo(j).stageIds
+    }
+    return j1 - j0, len(stages)
+
+
+class TestLuFamilyPlanPin:
+    """Plan-shape pins for lu()/solve() and the la_* LU queries
+    (perfbench geometry for solve/lu: N=1024, block 512, leaf 512, AQE
+    off, 8 shuffle partitions). Recorded on the two separate
+    recursions the shared skeleton replaced; la_solve_residual then
+    had one stage more (88)."""
+
+    @pytest.fixture
+    def pinned(self, spark):
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", "8")
+        yield
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+
+    @staticmethod
+    def _inputs(spark):
+        from matrixinversion_spark.matrix.core import BlockMatrixFrame
+
+        a = BlockMatrixFrame.random_uniform(
+            spark, 1024, block_size=512, seed=46
+        ).persist()
+        b = BlockMatrixFrame.random_uniform(
+            spark, 1024, m=128, block_size=512, seed=8
+        ).persist()
+        a.df.count(), b.df.count()
+        return a, b
+
+    def test_solve_fingerprint(self, spark, pinned):
+        from matrixinversion_spark.matrix import inverse as invmod
+
+        a, b = self._inputs(spark)
+        out = {}
+        got = _jobs_and_stages(spark, lambda: out.setdefault(
+            "x", invmod.solve(a, b, leaf_size=512).to_numpy()
+        ))
+        assert got == (13, 81), f"solve (jobs, stages) = {got}"
+        assert np.abs(a.to_numpy() @ out["x"] - b.to_numpy()).max() < 1e-8
+        a.unpersist(), b.unpersist()
+
+    def test_lu_fingerprint(self, spark, pinned):
+        from matrixinversion_spark.matrix import lu as lumod
+
+        a, b = self._inputs(spark)
+
+        def factor_and_write():
+            _, lo, up = lumod.lu(a, leaf_size=512)
+            for f in (lo, up):
+                f.df.write.format("noop").mode("overwrite").save()
+            lo.release()
+
+        got = _jobs_and_stages(spark, factor_and_write)
+        assert got == (8, 46), f"lu (jobs, stages) = {got}"
+        a.unpersist(), b.unpersist()
+
+    @pytest.mark.parametrize("name, expect", [
+        ("la_lu_residual", (10, 53)),
+        ("la_solve_residual", (15, 87)),
+        ("la_determinant", (8, 37)),
+    ])
+    def test_la_query_fingerprint(self, spark, name, expect):
+        from matrixinversion_spark.matrix import queries
+
+        rows = []
+        got = _jobs_and_stages(spark, lambda: rows.extend(
+            getattr(queries, name)(spark, SF_DIR).collect()
+        ))
+        assert got == expect, f"{name} (jobs, stages) = {got}"
+        assert rows[0][-1] is True
 
 
 class TestGuardReportSurfacing:

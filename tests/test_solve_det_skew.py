@@ -4,6 +4,7 @@ plan-shape regressions (pushdown, broadcast)."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -36,6 +37,71 @@ def test_determinant_matches_numpy(spark):
         )
         want = float(np.linalg.det(a))
         assert abs(got - want) <= 1e-9 * max(abs(want), 1.0), (n, got, want)
+
+
+def _frame(spark, a: np.ndarray, bs: int, local: bool):
+    bm = BlockMatrixFrame.from_numpy(spark, a, bs)
+    if local:
+        return bm
+    # same blocks without the driver twin: leaves run in executor tasks
+    return BlockMatrixFrame(bm.df, bm.n_rows, bm.n_cols, bs)
+
+
+@pytest.mark.parametrize("local", [False, True])
+@pytest.mark.parametrize("defect", ["singular_schur", "duplicate_row"])
+def test_singular_input_raises_at_any_leaf_size(spark, defect, local):
+    """The pivot floor comes from the input's scale, not a leaf's: a
+    Schur-complement leaf of a singular matrix is roundoff-sized, and a
+    floor taken from its own max let inverse() return 1e15-sized
+    garbage at leaf 64 where leaf 128 raised."""
+    rng = np.random.default_rng(11)
+    n = 128
+    a = rng.random((n, n))
+    if defect == "singular_schur":
+        # A4 = A3·A1⁻¹·A2: A1 is fine, the Schur complement is zero
+        a[64:, 64:] = a[64:, :64] @ np.linalg.solve(a[:64, :64], a[:64, 64:])
+    else:
+        a[1] = a[0]  # inside A1 at leaf 64
+    bm = _frame(spark, a, 32, local)
+    b = _frame(spark, rng.random((n, 4)), 32, local)
+    for leaf in (64, 128):
+        for run in (
+            lambda: invmod.inverse(bm, leaf_size=leaf).to_numpy(),
+            lambda: invmod.solve(bm, b, leaf_size=leaf).to_numpy(),
+            lambda: invmod.determinant(bm, leaf_size=leaf),
+        ):
+            with pytest.raises(Exception, match="singular leaf"):
+                run()
+
+
+def test_lu_family_releases_every_persisted_frame(spark, monkeypatch):
+    """Nothing solve()/determinant() persist outlives the result: leaf
+    task outputs, per-level factors and the solvers' halves all reach
+    ``retained`` and are unpersisted by to_numpy()/determinant()."""
+    persisted = []
+    df_cls = type(spark.range(1))
+    persist = df_cls.persist
+
+    def recording_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "persist", recording_persist)
+    rng = np.random.default_rng(5)
+    n = 128
+    a_np, b_np = rng.random((n, n)), rng.random((n, 8))
+    # block 16, leaf 32: an 8x8 grid, two recursion levels
+    a = _frame(spark, a_np, 16, local=False)
+    b = _frame(spark, b_np, 16, local=False)
+    x = invmod.solve(a, b, leaf_size=32).to_numpy()
+    assert np.abs(a_np @ x - b_np).max() < 1e-9
+    det = invmod.determinant(a, leaf_size=32)
+    sign, logdet = np.linalg.slogdet(a_np)
+    assert np.sign(det) == sign
+    assert abs(np.log(abs(det)) - logdet) < 1e-8 * abs(logdet)
+    assert persisted, "solve() persisted nothing: the check is vacuous"
+    leaked = [d for d in persisted if d.is_cached]
+    assert not leaked, f"{len(leaked)} of {len(persisted)} frames still cached"
 
 
 def test_salted_join_equals_plain(spark):
@@ -88,6 +154,8 @@ def test_skew_demo_no_straggler(spark):
         salted_join,
     )
 
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -113,8 +181,10 @@ def test_skew_demo_no_straggler(spark):
         # salted: shattered across 16 (key, salt) combos
         assert salted_frac <= 0.20, salted_frac
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        # restore the session's values, not Spark's defaults: a later
+        # plan pin depends on the session's 64 MB broadcast threshold
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_plan_shapes(spark):
